@@ -6710,7 +6710,7 @@ def _all_oracle_sql() -> dict[str, str]:
         # conversation operators: GENUINE SQL over the raw fixture turns
         # (transcripts_raw is the untouched input, not a replica) — dedup
         # is latest-per-(conv_id,turn_idx) by (ts DESC, text DESC),
-        # matching latest_per_key(strategy='agg') exactly
+        # matching dedup_latest_turns exactly
         "conv_structure": f"""
             WITH d AS (
               SELECT * FROM (

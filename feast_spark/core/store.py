@@ -31,7 +31,7 @@ from feast_spark.core.model import (
     OnDemandFeatureView,
 )
 from feast_spark.core.registry import Registry
-from feast_spark.operators.latest import latest_per_key, pull_latest
+from feast_spark.operators.latest import latest_per_key
 from feast_spark.operators.pit_join import point_in_time_join
 
 
@@ -252,8 +252,8 @@ class FeatureStore:
     def _serving_dir(self, view: str) -> str:
         return os.path.join(self.repo_path, "serving", view)
 
-    def _snapshot_names(self, view: str) -> list[str]:
-        d = self._serving_dir(view)
+    def list_snapshots(self, view_name: str) -> list[str]:
+        d = self._serving_dir(view_name)
         if not os.path.isdir(d):
             return []
         return sorted(s for s in os.listdir(d) if s.startswith("snap-"))
@@ -264,7 +264,7 @@ class FeatureStore:
         committed dirs appear atomically via rename, so two concurrent
         committers can never make a reader observe a half-written
         snapshot or a pointer to an older one (round-2 finding #5)."""
-        snaps = self._snapshot_names(view)
+        snaps = self.list_snapshots(view)
         return os.path.join(self._serving_dir(view), snaps[-1]) if snaps else None
 
     def _try_commit_snapshot(
@@ -297,7 +297,7 @@ class FeatureStore:
         # (best effort; _latest_snapshot never reads it)
         try:
             with open(os.path.join(d, "LATEST"), "w") as f:
-                f.write(self._snapshot_names(view)[-1])
+                f.write(self.list_snapshots(view)[-1])
         except OSError:
             pass
         return os.path.basename(target)
@@ -306,7 +306,7 @@ class FeatureStore:
         """Crashed-writer recovery: remove ``.tmp-*`` staging dirs older
         than ``max_age_sec``. A writer that died between its parquet
         write and the rename CAS leaves an orphan staging dir — invisible
-        to readers (``_snapshot_names`` only lists ``snap-*``) but
+        to readers (``list_snapshots`` only lists ``snap-*``) but
         leaking disk. Age-gated so a LIVE concurrent writer's staging dir
         is never swept (its mtime is recent while it streams parquet).
         Returns the number of dirs removed."""
@@ -406,7 +406,7 @@ class FeatureStore:
         import shutil
 
         keep_last = max(1, keep_last)
-        snaps = self._snapshot_names(view_name)
+        snaps = self.list_snapshots(view_name)
         removed = 0
         for name in snaps[:-keep_last]:
             shutil.rmtree(
@@ -493,6 +493,30 @@ class FeatureStore:
             if snap is not None:
                 return snap
 
+    def _merge_commit(
+        self,
+        view: str,
+        rows: DataFrame,
+        keys: list[str],
+        ts: str,
+        created: str | None = None,
+    ) -> str:
+        """Serializable read-merge-commit: the latest row per key over
+        ``rows`` and the latest snapshot becomes the next snapshot. A lost
+        CAS (another writer committed since the read) re-reads the new
+        latest and merges again (see :meth:`_try_commit_snapshot`).
+        Returns the committed snapshot name."""
+        while True:
+            prev = self._latest_snapshot(view)
+            merged = rows
+            if prev is not None:
+                merged = rows.unionByName(self.spark.read.parquet(prev))
+            snap = self._try_commit_snapshot(
+                view, latest_per_key(merged, keys, ts, created), prev
+            )
+            if snap is not None:
+                return snap
+
     def materialize(
         self,
         view_name: str,
@@ -503,44 +527,24 @@ class FeatureStore:
         """Latest row per key in [start, end] -> merged into the serving
         snapshot; interval checkpointed (feature_store.py:2968-2973)."""
         fv = self._views[view_name]
-        src = fv.read(self.spark)
+        ts = fv.timestamp_field
         created = fv.created_timestamp_column
-        fresh = pull_latest(
-            src,
-            fv.join_keys,
-            fv.feature_names,
-            fv.timestamp_field,
-            created_ts_col=created,
-            start=start,
-            end=end,
+        cols = [*fv.join_keys, *fv.feature_names, ts]
+        if created:
+            cols.append(created)
+        # inclusive bounds, matching the reference's BETWEEN (spark.py:98-166)
+        rows = (
+            fv.read(self.spark)
+            .filter(F.col(ts).between(F.lit(start), F.lit(end)))
+            .select(*cols)
         )
-        while True:  # serializable read-merge-commit (see _try_commit_snapshot)
-            prev = self._latest_snapshot(view_name)
-            if prev:
-                old = self.spark.read.parquet(prev)
-                merged = latest_per_key(
-                    fresh.unionByName(old),
-                    fv.join_keys,
-                    fv.timestamp_field,
-                    created_ts_col=created,
-                )
-            else:
-                merged = fresh
-            snap = self._try_commit_snapshot(view_name, merged, prev)
-            if snap is not None:
-                break
+        snap = self._merge_commit(view_name, rows, fv.join_keys, ts, created)
         self.registry.apply_materialization(
             view_name, start, end, run_id=run_id or snap
         )
         return self.spark.read.parquet(
             os.path.join(self._serving_dir(view_name), snap)
         )
-
-    def list_snapshots(self, view_name: str) -> list[str]:
-        d = self._serving_dir(view_name)
-        if not os.path.isdir(d):
-            return []
-        return sorted(s for s in os.listdir(d) if s.startswith("snap-"))
 
     def read_snapshot(self, view_name: str, snapshot: str | None = None) -> DataFrame:
         """Time travel over the serving table: read a specific immutable
@@ -594,16 +598,7 @@ class FeatureStore:
                 if batch_df.isEmpty():
                     return
                 fresh = batch_df.withColumn("__batch_id", F.lit(int(epoch_id)))
-                while True:  # serializable read-merge-commit
-                    prev = self._latest_snapshot(view_name)
-                    merged = fresh
-                    if prev:
-                        old = self.spark.read.parquet(prev)
-                        merged = latest_per_key(
-                            fresh.unionByName(old), merge_keys, "__batch_id"
-                        )
-                    if self._try_commit_snapshot(view_name, merged, prev) is not None:
-                        return
+                self._merge_commit(view_name, fresh, merge_keys, "__batch_id")
 
             out = agg.writeStream.outputMode("update")
         else:
@@ -612,17 +607,7 @@ class FeatureStore:
             def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
                 if batch_df.isEmpty():
                     return
-                fresh = latest_per_key(batch_df, sv.join_keys, ts, created)
-                while True:
-                    prev = self._latest_snapshot(view_name)
-                    merged = fresh
-                    if prev:
-                        old = self.spark.read.parquet(prev)
-                        merged = latest_per_key(
-                            fresh.unionByName(old), sv.join_keys, ts, created
-                        )
-                    if self._try_commit_snapshot(view_name, merged, prev) is not None:
-                        return
+                self._merge_commit(view_name, batch_df, sv.join_keys, ts, created)
 
             out = stream.writeStream.outputMode("update")
         return (
@@ -720,18 +705,10 @@ class FeatureStore:
 
     # -- push source (feature_store.py:3338-3374) --------------------------------
     def push(self, view_name: str, df: DataFrame) -> None:
-        """Synchronous push: merge rows straight into the serving table."""
+        """Synchronous push: merge rows straight into the serving table,
+        latest row per key (also among the pushed rows)."""
         fv = self._views[view_name]
-        while True:  # serializable read-merge-commit
-            prev = self._latest_snapshot(view_name)
-            merged = df
-            if prev:
-                old = self.spark.read.parquet(prev)
-                merged = latest_per_key(
-                    df.unionByName(old),
-                    fv.join_keys,
-                    fv.timestamp_field,
-                    created_ts_col=fv.created_timestamp_column,
-                )
-            if self._try_commit_snapshot(view_name, merged, prev) is not None:
-                break
+        self._merge_commit(
+            view_name, df, fv.join_keys, fv.timestamp_field,
+            fv.created_timestamp_column,
+        )

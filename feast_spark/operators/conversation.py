@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from feast_spark.operators.latest import latest_per_key
+from feast_spark.operators.latest import dedup_latest_turns as _deduped
 
 __all__ = [
     "conversation_structure",
@@ -97,16 +97,6 @@ def _norm_text(col: str = "text"):
     dedup key would be a latent cross-engine divergence."""
     return F.trim(
         F.regexp_replace(F.coalesce(F.col(col), F.lit("")), _ASCII_WS, " ")
-    )
-
-
-def _deduped(turns: DataFrame) -> DataFrame:
-    """Latest row per (conv_id, turn_idx) — the fixture (and any at-least-
-    once ingest) delivers edited/duplicate keys; latest-ts wins, exactly
-    the pipeline's pull_latest semantics. Hash-agg strategy: map-side
-    combine, no window sort."""
-    return latest_per_key(
-        turns, ["conv_id", "turn_idx"], "ts", strategy="agg", tiebreak_cols=["text"]
     )
 
 

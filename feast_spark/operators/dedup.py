@@ -1155,19 +1155,9 @@ def conversation_neardup_pairs(
     conv_id), |convs| ~ |turns|/E[turns-per-conv], so every downstream
     LSH structure is an order of magnitude smaller than the turn table.
     """
-    from feast_spark.operators.latest import latest_per_key
+    from feast_spark.operators.latest import dedup_latest_turns
 
-    deduped = (
-        transcripts
-        if pre_deduped
-        else latest_per_key(
-            transcripts,
-            ["conv_id", "turn_idx"],
-            "ts",
-            tiebreak_cols=["text"],
-            strategy="agg",
-        )
-    )
+    deduped = transcripts if pre_deduped else dedup_latest_turns(transcripts)
     conv_text = deduped.groupBy("conv_id").agg(
         F.array_join(
             F.transform(

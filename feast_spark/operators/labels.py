@@ -27,7 +27,7 @@ from feast_spark.operators.latest import latest_per_key
 def resolve_last_write_wins(
     df: DataFrame, keys: list[str], ts_col: str, created_ts_col: str | None = None
 ) -> DataFrame:
-    return latest_per_key(df, keys, ts_col, created_ts_col, strategy="agg")
+    return latest_per_key(df, keys, ts_col, created_ts_col)
 
 
 def resolve_labeler_priority(

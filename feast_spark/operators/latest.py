@@ -1,29 +1,31 @@
 """Latest-per-key and time-range scans — feast's materialization reads.
 
-- :func:`latest_per_key` == the ROW_NUMBER dedup feast uses everywhere:
+- :func:`latest_per_key` == the latest-row dedup feast uses everywhere:
   ``pull_latest_from_table_or_query`` SQL template
   (``spark_offline_store/spark.py:98-166``), the Spark DAG dedup node
   (``infra/compute_engines/spark/nodes.py:513-550``) and the Dask
   equivalent (``dask.py:367-417``).
+- :func:`dedup_latest_turns` == that dedup with the transcript turn key.
 - :func:`pull_all` == ``pull_all_from_table_or_query``
   (``offline_store.py:536-567``; Spark impl ``spark.py:409-487``): all
   rows in [start, end] projected to keys + features + ts.
 - :func:`pull_latest` == latest row per key within [start, end].
 
-The window sort is ``ts DESC, created_ts DESC`` with row_number — exactly
-feast's tie-break (``spark.py:151-157``). Pass ``tiebreak_cols`` to pin
-determinism when neither ts nor created is unique.
+The order is ``ts DESC, created_ts DESC`` — exactly feast's tie-break
+(``spark.py:151-157``) — computed as a ``max_by`` hash aggregation
+instead of the reference's ROW_NUMBER window. Pass ``tiebreak_cols`` to
+pin determinism when neither ts nor created is unique.
 
-Scale: one shuffle on the partition keys; partial aggregation does not
-apply to row_number, so for 100 TB prefer pre-partitioned/bucketed
-storage on the key, and AQE handles residual skew.
+Scale: one shuffle on the keys, after a map-side partial combine that
+leaves at most one row per key and map partition; AQE handles residual
+skew.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -33,46 +35,39 @@ def latest_per_key(
     ts_col: str,
     created_ts_col: str | None = None,
     tiebreak_cols: list[str] | None = None,
-    strategy: str = "window",
 ) -> DataFrame:
     """Newest row per key, ordering by (ts DESC[, created DESC[, tiebreaks]]).
 
-    strategy='window' is the reference's literal ROW_NUMBER plan
-    (one shuffle + sort). strategy='agg' computes the same result as
-    ``max_by(struct(<all cols>), struct(ts, created, tiebreaks))`` — a hash
-    aggregation with MAP-SIDE PARTIAL COMBINE: no global sort, and the
-    shuffle carries at most one row per (key, map-partition). At 10^12 rows
-    this is the difference between sort-spilling every partition and a
-    near-linear scan; prefer 'agg' whenever the ordering columns make the
-    order total (ties resolve arbitrarily-but-deterministically via the
-    struct comparison either way)."""
-    if strategy == "agg":
-        order_cols = [ts_col]
-        if created_ts_col:
-            order_cols.append(created_ts_col)
-        order_cols += list(tiebreak_cols or [])
-        out_cols = df.columns
-        payload = [c for c in out_cols if c not in keys]
-        agged = df.groupBy(*keys).agg(
-            F.max_by(
-                F.struct(*[F.col(c) for c in payload]),
-                F.struct(*[F.col(c) for c in order_cols]),
-            ).alias("__row")
-        )
-        return agged.select(
-            *keys, *[F.col(f"__row.{c}").alias(c) for c in payload]
-        ).select(*out_cols)
-
-    order = [F.col(ts_col).desc()]
+    ``max_by(struct(<payload>), struct(ts, created, tiebreaks))``: a hash
+    aggregation with map-side partial combine, so there is no global sort
+    and the shuffle carries at most one row per (key, map-partition). The
+    struct comparison ranks NULL fields lowest, which is the window order
+    ``ts DESC NULLS LAST`` of the reference's ROW_NUMBER plan; rows that
+    tie on every ordering column resolve arbitrarily, as they do there."""
+    order_cols = [ts_col]
     if created_ts_col:
-        order.append(F.col(created_ts_col).desc())
-    for c in tiebreak_cols or []:
-        order.append(F.col(c).desc())
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+        order_cols.append(created_ts_col)
+    order_cols += list(tiebreak_cols or [])
+    out_cols = df.columns
+    payload = [c for c in out_cols if c not in keys]
+    agged = df.groupBy(*keys).agg(
+        F.max_by(
+            F.struct(*[F.col(c) for c in payload]),
+            F.struct(*[F.col(c) for c in order_cols]),
+        ).alias("__row")
+    )
+    return agged.select(
+        *keys, *[F.col(f"__row.{c}").alias(c) for c in payload]
+    ).select(*out_cols)
+
+
+def dedup_latest_turns(turns: DataFrame) -> DataFrame:
+    """Latest row per (conv_id, turn_idx) by ``ts``; ``text`` breaks
+    exact-ts ties (reference tie-break discipline, spark.py:151-157). The
+    one turn-dedup policy: fixtures and at-least-once ingest deliver
+    edited or duplicate turn keys."""
+    return latest_per_key(
+        turns, ["conv_id", "turn_idx"], "ts", tiebreak_cols=["text"]
     )
 
 

@@ -11,15 +11,12 @@ spark.py:1709-1887``) and cross-checked against the Dask dataflow form
    the same way via its CONCAT row id, ``spark.py:1718-1724``; we key the
    window on the natural composite directly — no synthetic row-id string
    travels through the shuffle);
-2. time-bounded scan of the feature table (min/max entity ts ± ttl pushed
-   into the parquet scan — the ttl-derived bound is semantic, Catalyst
-   can't derive it: SURVEY §4);
-3. INNER join feature→entity on keys with ``f.ts <= e.ts`` (+ ttl lower
+2. INNER join feature→entity on keys with ``f.ts <= e.ts`` (+ ttl lower
    bound ``f.ts >= e.ts - ttl``; ttl==0 means upper bound only, matching
    ``dask.py:1167-1200``). Both sides are explicitly aliased so
    entity/feature frames sharing lineage (both filtered from one parent)
    resolve by alias, not by Spark's self-join disambiguation heuristic;
-4. keep the best feature row per (join_keys, entity_ts):
+3. keep the best feature row per (join_keys, entity_ts):
    ``ROW_NUMBER() OVER (PARTITION BY keys, entity_ts ORDER BY
    [qualified DESC,] ts DESC[, created DESC]) = 1`` (``spark.py:
    1836-1847``). With ``created_cutoff=True``, rows whose
@@ -27,24 +24,20 @@ spark.py:1709-1887``) and cross-checked against the Dask dataflow form
    ``_drop_duplicates``, ``dask.py:1203-1226,1229-1270`` — na_position=
    "first" + keep="last" means any qualified row beats every too-new
    row), and a surviving too-new row is blanked, not dropped;
-5. LEFT join the deduped features back onto the full entity frame on the
+4. LEFT join the deduped features back onto the full entity frame on the
    natural composite — entity rows with no match survive with NULL
    features ("blank, don't drop").
 
-Scale notes (100 TB): the window in step 4 partitions by
+Scale notes (100 TB): the window in step 3 partitions by
 ``(join_keys, entity_ts)`` which embeds the timestamp, so a mega-entity
 (hot ``conv_id``) fans out across partitions instead of collapsing onto
-one reducer (SURVEY §2.3 skew note). The raw key join in step 3 is the
-skew point — AQE skew-join splits it at runtime; pass
-``broadcast_features=True`` when the feature table is dimension-sized to
-skip the shuffle entirely. Shuffle rows carry only the natural key
-columns (vs the previous 64-char sha2 row id: ~70 bytes/row saved at
-every exchange).
+one reducer (SURVEY §2.3 skew note). The raw key join in step 2 is the
+skew point — AQE skew-join splits it at runtime. Shuffle rows carry only
+the natural key columns (vs the previous 64-char sha2 row id: ~70
+bytes/row saved at every exchange).
 """
 
 from __future__ import annotations
-
-from datetime import datetime
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -60,10 +53,7 @@ def point_in_time_join(
     ttl_seconds: int | None = None,
     features: list[str] | None = None,
     prefix: str | None = None,
-    broadcast_features: bool = False,
     created_cutoff: bool = False,
-    entity_ts_bounds: tuple[datetime, datetime] | None = None,
-    push_time_bounds: bool = False,
     tiebreak_cols: list[str] | None = None,
 ) -> DataFrame:
     """As-of join ``feature_df`` onto ``entity_df``.
@@ -79,14 +69,6 @@ def point_in_time_join(
     ones* wins; only when every candidate is too new does the entity row
     come back blank (``dask.py:1203-1270`` cutoff-before-dedup order).
 
-    The entity-range time bound on the feature scan is an OPTIMIZATION
-    (correctness comes from the join predicates): pass
-    ``entity_ts_bounds`` when the range is known (cheap, keeps the plan
-    lazy), or ``push_time_bounds=True`` to pre-scan the entity frame for
-    it (an eager min/max job — avoid inside multi-view accumulation where
-    it re-executes every upstream join; SURVEY §4 keeps the ttl-derived
-    bound explicit because Catalyst cannot derive it).
-
     ``tiebreak_cols`` pins determinism when (ts, created_ts) is not a
     total order over a key's feature rows.
     """
@@ -98,36 +80,13 @@ def point_in_time_join(
     # equal, matching the reference's pandas-merge key semantics
     entity_keys = entity_df.select(entity_ts_col, *join_keys).dropDuplicates()
 
-    # time-bounded feature scan: push entity ts range ± ttl into the scan.
-    # The ttl-derived bound is semantic — Catalyst can't infer it (SURVEY §4).
-    if entity_ts_bounds is not None:
-        lo_hi = {"lo": entity_ts_bounds[0], "hi": entity_ts_bounds[1]}
-    elif push_time_bounds:
-        lo_hi = entity_df.agg(
-            F.min(entity_ts_col).alias("lo"), F.max(entity_ts_col).alias("hi")
-        ).first()
-    else:
-        lo_hi = None
-    fdf = feature_df
-    if lo_hi is not None and lo_hi["hi"] is not None:
-        hi: datetime = lo_hi["hi"]
-        fdf = fdf.filter(F.col(feature_ts_col) <= F.lit(hi))
-        if ttl_seconds:
-            lo: datetime = lo_hi["lo"]
-            fdf = fdf.filter(
-                F.col(feature_ts_col)
-                >= F.lit(lo) - F.expr(f"INTERVAL {int(ttl_seconds)} SECONDS")
-            )
-
     fcols = [F.col(c) for c in join_keys] + [
         F.col(feature_ts_col).alias("__feature_ts")
     ] + [F.col(c).alias(f"__f_{c}") for c in features]
     if created_ts_col:
         fcols.append(F.col(created_ts_col).alias("__created_ts"))
-    fdf = fdf.select(*fcols).alias("__pit_f")
+    fdf = feature_df.select(*fcols).alias("__pit_f")
     probe = entity_keys.alias("__pit_e")
-    if broadcast_features:
-        fdf = F.broadcast(fdf)
 
     # explicit alias-qualified, null-safe equi-join: resolves by alias even
     # when both frames derive from the same parent (no "trivially true

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from feast_spark import rules
-from feast_spark.operators.latest import latest_per_key
+from feast_spark.operators.latest import dedup_latest_turns, latest_per_key
 from feast_spark.operators.pit_join import point_in_time_join
 
 SCORED_SCHEMA = (
@@ -64,7 +64,6 @@ CONV_RULE_ORDER = ["conv_perplexity", "conv_tool_spam"]
 class QualityConfig:
     rules: rules.RuleConfig = field(default_factory=rules.RuleConfig)
     feature_ttl_seconds: int | None = None  # None = unbounded as-of window
-    broadcast_conv_features: bool = True    # conv table is turns/|conv| smaller
     # OPT-IN corpus-trained LM gate (operators/lm.py, method='numpy'):
     # when set, turns the heuristic keep into keep AND (model ppl <=
     # lm_max_ppl), with drop_reason 'lm_perplexity' for the flips. The
@@ -83,18 +82,6 @@ class QualityConfig:
     # byte-identical.
     loop_min_repeats: int | None = None
     loop_min_words: int = 3
-
-
-def dedup_latest_turns(transcripts: DataFrame) -> DataFrame:
-    """Latest row per (conv_id, turn_idx); text desc pins determinism on
-    exact-ts ties (reference tie-break discipline, spark.py:151-157).
-
-    Uses the hash-aggregation strategy: map-side partial combine instead of
-    a global window sort — the scalable form of the same semantics."""
-    return latest_per_key(
-        transcripts, ["conv_id", "turn_idx"], "ts", tiebreak_cols=["text"],
-        strategy="agg",
-    )
 
 
 def score_transcripts(
@@ -234,10 +221,10 @@ def apply_conv_rules(
         )
     latest_feats = latest_per_key(
         feats.select("conv_id", "ts", "created_ts", *CONV_FEATURE_COLS),
-        ["conv_id"], "ts", created_ts_col="created_ts", strategy="agg",
+        ["conv_id"], "ts", created_ts_col="created_ts",
     ).drop("ts", "created_ts")
-    if cfg.broadcast_conv_features:
-        latest_feats = F.broadcast(latest_feats)
+    # the conv table is turns/|conv| smaller than the turn table
+    latest_feats = F.broadcast(latest_feats)
     if cfg.loop_min_repeats is not None:
         scored = mark_agent_loops(scored, cfg.loop_min_repeats, cfg.loop_min_words)
     else:

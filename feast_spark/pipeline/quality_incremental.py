@@ -216,7 +216,6 @@ def resolved_labels(spark: SparkSession, state_dir: str) -> DataFrame:
         log,
         ["conv_id", "turn_idx"],
         "batch_id",
-        strategy="agg",
         tiebreak_cols=["ts", "scrubbed_text"],
     )
 

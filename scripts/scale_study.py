@@ -547,12 +547,9 @@ def _one_size_conv(spark, n_convs: int) -> dict:
     # planted eligible pairs: the cloned convs' assistant turns whose
     # ORIGINAL normalized word count >= 5 (the near side then has >= 6),
     # counted on the deduped view the operator itself sees
-    from feast_spark.operators.latest import latest_per_key
+    from feast_spark.operators.latest import dedup_latest_turns
 
-    dd = latest_per_key(
-        near_src, ["conv_id", "turn_idx"], "ts",
-        strategy="agg", tiebreak_cols=["text"],
-    )
+    dd = dedup_latest_turns(near_src)
     norm = _norm_text("text")
     planted = (
         dd.filter(F.col("role") == "assistant")

@@ -618,3 +618,50 @@ def test_erase_keys_validation(spark, tmp_path):
         store.erase_keys("nv", spark.createDataFrame([(1,)], "other bigint"))
     with pytest.raises(ValueError, match="not materialized"):
         store.erase_keys("nv", spark.createDataFrame([(1,)], "driver_id bigint"))
+
+
+@pytest.mark.parametrize("materialized", [False, True])
+def test_push_dedups_pushed_rows(spark, tmp_path, materialized):
+    """Two pushed rows for one key land once, the newer one, whether or
+    not the view has a serving snapshot yet."""
+    root = tmp_path / "push_repo"
+    root.mkdir()
+    feats = pd.DataFrame(
+        {
+            "driver_id": [1, 2],
+            "event_timestamp": [_mk("2024-01-01"), _mk("2024-01-01")],
+            "created": [_mk("2024-01-01"), _mk("2024-01-01")],
+            "conv_rate": [0.1, 0.2],
+        }
+    )
+    for c in ("event_timestamp", "created"):
+        feats[c] = feats[c].astype("datetime64[us]")
+    fpath = str(root / "src.parquet")
+    feats.to_parquet(fpath)
+
+    store = FeatureStore(spark, str(root))
+    fv = FeatureView(
+        name="pushed",
+        entities=[Entity("driver", "driver_id")],
+        source=ParquetSource(
+            path=fpath, timestamp_field="event_timestamp",
+            created_timestamp_column="created",
+        ),
+        schema=[Field("driver_id", "bigint"), Field("conv_rate", "double")],
+    )
+    store.apply([fv])
+    if materialized:
+        store.materialize("pushed", _mk("2023-12-31"), _mk("2024-01-02"))
+    pushed = spark.createDataFrame(
+        [
+            (1, 5.0, _mk("2024-01-03"), _mk("2024-01-03")),
+            (1, 9.0, _mk("2024-01-04"), _mk("2024-01-04")),
+        ],
+        "driver_id bigint, conv_rate double, event_timestamp timestamp, "
+        "created timestamp",
+    )
+    store.push("pushed", pushed)
+
+    got = store.get_latest_features("pushed").toPandas()
+    assert got[got.driver_id == 1].conv_rate.tolist() == [9.0]
+    assert sorted(got.driver_id) == ([1, 2] if materialized else [1])
